@@ -191,7 +191,11 @@ object Canonicalize {
     *   graph spent 3.8 s on round latency). Bounded memory:
     *   localMaxEdges edges ≈ tens of MB of strings on the driver.
     *   Identical results (min-string representative, deterministic);
-    *   0 forces the distributed path (benches/plan specs).
+    *   0 forces the distributed path (benches/plan specs). When the
+    *   optimizer's size estimate puts the edge list under the bound, the
+    *   graph is solved from ONE bounded evaluation of the edge plan, with
+    *   no checkpoint, count or second pass; an estimated-larger plan is
+    *   checkpointed and counted first, so it is never evaluated twice.
     */
   def connectedComponents(
       edges: DataFrame,
@@ -202,6 +206,22 @@ object Canonicalize {
       encodeMinBytesPerName: Double,
       localMaxEdges: Long): DataFrame = {
     val spark = edges.sparkSession
+    val bidirStr = edges.select(col("src"), col("dst"))
+      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
+      .distinct()
+
+    // small by estimate: pull at most localMaxEdges + 1 edges. The
+    // iterator runs bidirStr's own plan, so if the estimate was low the
+    // checkpoint below reuses its shuffle output instead of recomputing it
+    if (estimatedRows(bidirStr) <= localMaxEdges) {
+      val it = bidirStr.toLocalIterator()
+      val es = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+      while (es.length <= localMaxEdges && it.hasNext) {
+        val r = it.next(); es += ((r.getString(0), r.getString(1)))
+      }
+      if (es.length <= localMaxEdges) return localUnionFind(spark, es)
+    }
+
     checkpointDir.foreach(spark.sparkContext.setCheckpointDir)
 
     // checkpoint-file bookkeeping: each checkpointed df owns exactly the
@@ -293,26 +313,23 @@ object Canonicalize {
       labels
     }
 
-    val bidirStr = save(
-      edges.select(col("src"), col("dst"))
-        .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct())
-
-    val nBidir = bidirStr.count()
-    if (nBidir <= localMaxEdges) return localUnionFind(edges.sparkSession, bidirStr)
+    val saved = save(bidirStr)
+    val nBidir = saved.count()
+    if (nBidir <= localMaxEdges)
+      return localUnionFind(spark, saved.collect().map(r => (r.getString(0), r.getString(1))))
 
     // the entropy probe only runs once the edge threshold is reached —
     // small graphs take the string path with zero extra work
     if (nBidir < encodeMinEdges ||
-        sampledBytesPerName(bidirStr) < encodeMinBytesPerName) {
+        sampledBytesPerName(saved) < encodeMinBytesPerName) {
       // small graph OR compressible names: string labels directly
       // (min-string == the contract; lz4'd string shuffles are cheap)
-      ccLoop(bidirStr, Seq.empty)
+      ccLoop(saved, Seq.empty)
     } else {
-      val (dict, encoded) = encodeEdges(bidirStr, save)
+      val (dict, encoded) = encodeEdges(saved, save)
       val byName = (as: String) => dict
         .select(col("node").as(as), col("nid").as(s"${as}_id"))
-      val bidir = save(encoded) // bidirStr is already bidirected + distinct
+      val bidir = save(encoded) // saved is already bidirected + distinct
       val labels = ccLoop(bidir, Seq(dict))
       // decode ids back to strings (once, after convergence)
       labels
@@ -321,6 +338,15 @@ object Canonicalize {
           "component")
         .select(col("node_str").as("node"), col("comp_str").as("component"))
     }
+  }
+
+  /** Row count the optimizer expects of `df`: its row estimate, else its
+    * size estimate over the planner's per-row size. No job runs.
+    */
+  private def estimatedRows(df: DataFrame): BigInt = {
+    val stats = df.queryExecution.optimizedPlan.stats
+    stats.rowCount.getOrElse(
+      stats.sizeInBytes / (8 + df.schema.map(_.dataType.defaultSize).sum))
   }
 
   /** Driver-local connected components for BOUNDED small graphs:
@@ -333,9 +359,8 @@ object Canonicalize {
     */
   private def localUnionFind(
       spark: org.apache.spark.sql.SparkSession,
-      bidir: DataFrame): DataFrame = {
+      es: scala.collection.Seq[(String, String)]): DataFrame = {
     import spark.implicits._
-    val es = bidir.select("src", "dst").as[(String, String)].collect()
     val idOf = new java.util.HashMap[String, Integer]()
     val names = scala.collection.mutable.ArrayBuffer.empty[String]
     def id(n: String): Int = {

@@ -15,10 +15,10 @@ import graft.pipeline.Pipeline
   * in this environment, so the same contract is built on parquet):
   *
   *  - **bucketing on subject hash**: output partitioned by
-  *    `bucket = pmod(xxhash64(subj), N)`, rows sorted by subj within
-  *    partitions — downstream subject joins/aggregations prune by bucket
-  *    and co-locate equal subjects (north_star: "explicit bucketing on
-  *    subject-hash").
+  *    `bucket = pmod(xxhash64(subj), N)`, rows sorted by (subj, pred, obj)
+  *    within every file — downstream subject joins/aggregations prune by
+  *    bucket and co-locate equal subjects (north_star: "explicit bucketing
+  *    on subject-hash").
   *  - **per-partition lineage + metrics checkpoints enabling exact resume**:
   *    work is split into `unit = pmod(xxhash64(url), units)` slices; each
   *    completed unit gets a lineage record (doc/triple counts) written
@@ -34,12 +34,32 @@ object TripleStore {
   def bucketOf(c: org.apache.spark.sql.Column, n: Int) =
     pmod(xxhash64(c), lit(n)).cast("int")
 
+  /** The one exchange of a store write partitioned on the int column `key`,
+    * whose values are `keys` (ascending, distinct, non-empty). Rows go to
+    * min(|keys|, defaultParallelism) tasks, each taking a contiguous run of
+    * the keys, so every key (one partition directory, one file) is written
+    * by exactly one task. AQE never coalesces a fixed partition count;
+    * under `repartition(col(key))` it merged a small build's 32-bucket
+    * write into one task. The count follows the cores, not the keys: each
+    * write task pays a fixed cost (deserializing the writer's Hadoop conf),
+    * and one task per bucket measured slower than one per core.
+    *
+    * Rows sort by (key, subj, pred, obj) within each task. The planned
+    * write requires `key` order; a sort that does not lead with it is
+    * replaced by Spark's own `Sort [key]`, losing the subject order.
+    */
+  private def clustered(df: DataFrame, key: String, keys: Seq[Int]): DataFrame = {
+    val n = math.min(keys.size, df.sparkSession.sparkContext.defaultParallelism)
+    val slot = new Array[Int](keys.last + 1)
+    keys.zipWithIndex.foreach { case (k, i) => slot(k) = i * n / keys.size }
+    df.repartitionById(n, element_at(typedLit(slot), col(key) + 1))
+      .sortWithinPartitions(key, "subj", "pred", "obj")
+  }
+
   /** Plain bucketed write of a triple Dataset (no resume bookkeeping). */
   def write(triples: Dataset[Triple], path: String, buckets: Int = 32): Unit = {
-    triples.toDF()
-      .withColumn("bucket", bucketOf(col("subj"), buckets))
-      .repartition(col("bucket"))
-      .sortWithinPartitions("subj", "pred", "obj")
+    clustered(triples.toDF().withColumn("bucket", bucketOf(col("subj"), buckets)),
+      "bucket", 0 until buckets)
       .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(path)
   }
 
@@ -83,13 +103,15 @@ object TripleStore {
     // overwrite mode scoped to the writer, not the session conf — mutating
     // the session would silently flip TripleStore.write's later
     // SaveMode.Overwrite from truncate to dynamic semantics
-    combined
-      .repartition(col("unit")).sortWithinPartitions("subj", "pred", "obj")
+    clustered(combined, "unit", affected)
       .write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("unit").parquet(staging)
+    // no exchange: each staged unit file is read whole by one task; the
+    // sort keeps the subject order the planned write's Sort [unit] drops
     spark.read.parquet(staging)
       .filter(col("unit").isin(affected: _*))
+      .sortWithinPartitions("unit", "subj", "pred", "obj")
       .write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("unit").parquet(main)
@@ -132,6 +154,10 @@ object TripleStore {
   /** Run (or resume) the pipeline over `pages`, materializing
     * `outDir/data/unit=N` parquet partitions plus lineage. Returns units processed
     * in this invocation.
+    *
+    * Lineage counts are exactly-once: docs come from the input pages and
+    * triples from the committed parquet, both read by one query after the
+    * data commit. A unit whose pages emit no triples still gets its row.
     */
   def runCheckpointed(
       pages: Dataset[PageRow],
@@ -150,14 +176,13 @@ object TripleStore {
     }
 
     val done = completedUnits(outDir)
+    val pendingUnits = (0 until units).filterNot(done)
     val withUnit = pages.withColumn("unit", bucketOf(col("url"), units))
     val pending =
       if (done.isEmpty) withUnit
       else withUnit.filter(!col("unit").isin(done.toSeq: _*))
-
-    val docCounts = pending.groupBy(col("unit"))
-      .agg(count(lit(1)).as("docs")).as[(Int, Long)].collect().toMap
-    if (docCounts.isEmpty) return Vector.empty
+    // a resume with nothing left writes nothing; a fresh run skips the probe
+    if (pendingUnits.isEmpty || (done.nonEmpty && pending.isEmpty)) return Vector.empty
 
     val triples = pending
       .select("url", "warc_ts", "html", "text", "lang", "unit")
@@ -170,23 +195,21 @@ object TripleStore {
         }
       }.toDF("unit", "t").select(col("unit"), col("t.*"))
 
-    triples
-      .repartition(col("unit"))
-      .sortWithinPartitions("subj", "pred", "obj")
+    clustered(triples, "unit", pendingUnits)
       .write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("unit").parquet(dataDir(outDir))
 
-    // metrics from what was actually committed, then lineage (commit point)
-    val pendingUnits = docCounts.keySet
-    val tripleCounts = spark.read.parquet(dataDir(outDir))
-      .filter(col("unit").isin(pendingUnits.toSeq: _*))
-      .groupBy("unit").agg(count(lit(1)).as("triples"))
-      .as[(Int, Long)].collect().toMap
-
-    val results = pendingUnits.toVector.sorted.map { u =>
-      UnitLineage(u, docCounts.getOrElse(u, 0L), tripleCounts.getOrElse(u, 0L))
-    }
+    // metrics from the input and what was actually committed, then
+    // lineage (commit point); units without pages get no row. The schema
+    // is given: a store whose input had no pages holds no files to infer it
+    val committed = spark.read.schema(triples.schema).parquet(dataDir(outDir))
+      .filter(col("unit").isin(pendingUnits: _*))
+    val results = pending.select(col("unit"), lit(1L).as("doc"), lit(0L).as("triple"))
+      .unionByName(committed.select(col("unit"), lit(0L).as("doc"), lit(1L).as("triple")))
+      .groupBy("unit").agg(sum("doc").as("docs"), sum("triple").as("triples"))
+      .filter(col("docs") > 0)
+      .as[UnitLineage].collect().toVector.sortBy(_.unit)
     if (results.nonEmpty) {
       Files.createDirectories(lineageDir(outDir))
       if (!Files.exists(unitsFile))

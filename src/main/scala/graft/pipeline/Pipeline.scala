@@ -35,10 +35,13 @@ object Pipeline {
       if (disambiguate) graft.link.Disambiguator.default else null
   }
 
-  /** Per-page pure conversion — the unit of work. */
+  /** Per-page pure conversion — the unit of work. A page with neither
+    * text nor html has nothing to convert and yields no triples.
+    */
   def convertPage(p: PageRow, cfg: Config): Vector[Triple] = {
     val text =
       if (p.text != null && p.text.nonEmpty) p.text
+      else if (p.html == null) return Vector.empty
       else HtmlText.extract(new String(p.html, StandardCharsets.UTF_8))
     val sentences = Segmenter.sentences(text)
     val frames = FrameDetect.detectDoc(sentences)

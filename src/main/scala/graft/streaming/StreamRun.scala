@@ -31,6 +31,14 @@ private[streaming] object StreamRun {
 
   /** Run `body` (which starts and awaits a stream on `spark`) with no-data
     * micro-batches disabled, restoring the previous setting after.
+    *
+    * Assumes at most ONE drain at a time per session: the setting is
+    * session-wide conf with no lock around the save/set/restore. Two
+    * overlapping drains on one session could capture each other's override
+    * as the "previous" value and leave no-data batches disabled after both
+    * end, and any other stream started during a drain inherits the
+    * override. Every caller in this package awaits its stream inside the
+    * scope, so drains run one after another.
     */
   def withoutNoDataBatches[T](spark: SparkSession)(body: => T): T = {
     val prev = spark.conf.getOption(Key)

@@ -96,8 +96,11 @@ object StreamingPipeline {
     * (TripleStore.upsertDocs copy-on-write on the affected unit
     * partitions), new documents append. AvailableNow trigger: each call
     * drains what is new since the last checkpoint and terminates, the
-    * incremental-backfill pattern; swap the trigger for a continuous
-    * deployment.
+    * incremental-backfill pattern. A continuous deployment must swap the
+    * trigger AND drop the `StreamRun.withoutNoDataBatches` wrapper: with
+    * no-data batches disabled, event-time timeouts never fire during idle
+    * periods, so per-url state would not be evicted until the next data
+    * batch arrives.
     */
   def streamToStore(
       spark: SparkSession,

@@ -73,6 +73,28 @@ class OperatorsSpec extends AnyFunSuite {
       .filter(f => f.isDirectory && f.getName.startsWith("rdd-"))
     assert(rddDirs.nonEmpty && rddDirs.size <= 4,
       s"expected 1..4 live checkpoint dirs after GC, found ${rddDirs.size}")
+    // a checkpoint dir on a graph under localMaxEdges: solved locally,
+    // same labels, nothing written under the dir
+    val unused = java.nio.file.Files.createTempDirectory("cc_ckpt_small").toFile
+    val viaLocalCkpt = Canonicalize.connectedComponents(edges, checkpointDir = Some(unused.toString))
+      .as[(String, String)].collect().toSet
+    assert(viaLocalCkpt == local)
+    assert(unused.listFiles().isEmpty, s"files under $unused: ${unused.listFiles().toSeq}")
+    // an edge plan the optimizer sizes at ~1 row (one exploded array) but
+    // holding 20 edges: the bounded pull overflows localMaxEdges = 8 and
+    // the distributed path takes over with the same labels
+    val chained = Seq(Seq.tabulate(10)(i => (s"c$i", s"c${i + 1}")) ++
+        Seq.tabulate(10)(i => (s"d$i", s"d${i + 1}")))
+      .toDF("es").select(org.apache.spark.sql.functions.explode($"es").as("e"))
+      .select($"e._1".as("src"), $"e._2".as("dst"))
+    val overflowDir = java.nio.file.Files.createTempDirectory("cc_ckpt_overflow").toFile
+    val overflowed = Canonicalize.connectedComponents(chained, 20, Some(overflowDir.toString), 2,
+        encodeMinEdges = 1000000L, encodeMinBytesPerName = 16.0, localMaxEdges = 8L)
+      .as[(String, String)].collect().toSet
+    assert(overflowed == Canonicalize.connectedComponents(chained)
+      .as[(String, String)].collect().toSet)
+    assert(overflowed.map(_._2) == Set("c0", "d0"))
+    assert(overflowDir.listFiles().nonEmpty, "overflow did not reach the distributed path")
   }
 
   test("rewrite: shuffle-join path (no broadcast) matches the broadcast path") {
