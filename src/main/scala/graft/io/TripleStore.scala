@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -78,26 +79,41 @@ object TripleStore {
       newTriples: Dataset[Triple],
       outDir: String,
       units: Int = 16): Seq[Int] = {
+    import newTriples.sparkSession.implicits._
+    upsertDocs(newTriples, newTriples.select("docId").as[String], outDir, units)
+  }
+
+  /** `upsertDocs` replacing every document in `docIds`, the docIds of
+    * `newTriples` among them: a document whose new version emits no
+    * triples loses its old ones, and a unit left with no triples loses its
+    * partition.
+    */
+  private[graft] def upsertDocs(
+      newTriples: Dataset[Triple],
+      docIds: Dataset[String],
+      outDir: String,
+      units: Int): Seq[Int] = {
     val spark = newTriples.sparkSession
     import spark.implicits._
-    val withUnit = newTriples.toDF().withColumn("unit", bucketOf(col("docId"), units))
-    val affected = withUnit.select("unit").distinct().as[Int].collect().toSeq.sorted
+    val ids = docIds.toDF("docId")
+    val affected = ids.select(bucketOf(col("docId"), units)).distinct()
+      .as[Int].collect().toSeq.sorted
     if (affected.isEmpty) return Seq.empty
+    val withUnit = newTriples.toDF().withColumn("unit", bucketOf(col("docId"), units))
     val main = dataDir(outDir)
     val staging = s"$outDir/_staging"
     // staging is per-batch scratch: clear it first, so unit partitions from
     // EARLIER batches can't leak into this batch's second hop (they would
     // both grow each write toward a full-store rewrite and silently revert
     // units another writer touched in between)
-    val stagingPath = new org.apache.hadoop.fs.Path(staging)
+    val stagingPath = new Path(staging)
     val fs = stagingPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(stagingPath)) fs.delete(stagingPath, true)
-    val docs = newTriples.toDF().select("docId").distinct()
     val combined =
       if (Files.exists(Paths.get(main)))
         spark.read.parquet(main)
           .filter(col("unit").isin(affected: _*))
-          .join(broadcast(docs), Seq("docId"), "left_anti")
+          .join(broadcast(ids.distinct()), Seq("docId"), "left_anti")
           .unionByName(withUnit)
       else withUnit
     // overwrite mode scoped to the writer, not the session conf — mutating
@@ -107,14 +123,20 @@ object TripleStore {
       .write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("unit").parquet(staging)
+    // a unit with no rows left stages no partition, and dynamic overwrite
+    // would keep its old one: delete it instead
+    val (staged, emptied) = affected.partition(u =>
+      fs.exists(new Path(s"$staging/unit=$u")))
     // no exchange: each staged unit file is read whole by one task; the
     // sort keeps the subject order the planned write's Sort [unit] drops
-    spark.read.parquet(staging)
-      .filter(col("unit").isin(affected: _*))
-      .sortWithinPartitions("unit", "subj", "pred", "obj")
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("unit").parquet(main)
+    if (staged.nonEmpty)
+      spark.read.parquet(staging)
+        .filter(col("unit").isin(staged: _*))
+        .sortWithinPartitions("unit", "subj", "pred", "obj")
+        .write.mode(SaveMode.Overwrite)
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("unit").parquet(main)
+    emptied.foreach(u => fs.delete(new Path(s"$main/unit=$u"), true))
     affected
   }
 
@@ -162,8 +184,7 @@ object TripleStore {
   def runCheckpointed(
       pages: Dataset[PageRow],
       outDir: String,
-      units: Int = 16,
-      cfg: Pipeline.Config = Pipeline.Config()): Vector[UnitLineage] = {
+      units: Int = 16): Vector[UnitLineage] = {
     val spark = pages.sparkSession
     import spark.implicits._
 
@@ -184,16 +205,9 @@ object TripleStore {
     // a resume with nothing left writes nothing; a fresh run skips the probe
     if (pendingUnits.isEmpty || (done.nonEmpty && pending.isEmpty)) return Vector.empty
 
-    val triples = pending
-      .select("url", "warc_ts", "html", "text", "lang", "unit")
-      .as[(String, java.sql.Timestamp, Array[Byte], String, String, Int)]
-      .mapPartitions { it =>
-        val c = cfg.copy(dict = cfg.dictionary)
-        it.flatMap { case (url, ts, html, text, lang, unit) =>
-          Pipeline.convertPage(PageRow(url, ts, html, text, lang), c)
-            .map(t => (unit, t))
-        }
-      }.toDF("unit", "t").select(col("unit"), col("t.*"))
+    // a triple's docId is its page's url, so it lands in the page's unit
+    val triples = Pipeline.triples(pending.as[PageRow])
+      .withColumn("unit", bucketOf(col("docId"), units))
 
     clustered(triples, "unit", pendingUnits)
       .write.mode(SaveMode.Overwrite)

@@ -94,12 +94,8 @@ object Materialize {
 
     // batch-computed expected output of the streaming KG query (q45):
     // same per-doc transform + the same dedup keys the stream uses
-    val streamPages = SynthCorpus.pages(spark, StreamDocs, seed = StreamSeed)
-    val streamTriples = streamPages.mapPartitions { it =>
-      val cfg = Pipeline.Config()
-      val c = cfg.copy(dict = cfg.dictionary)
-      it.flatMap(p => Pipeline.convertPage(p, c).map(t => (p.warc_ts, t)))
-    }.select(col("_1").as("warc_ts"), col("_2.*"))
+    val streamTriples = Pipeline.timestampedTriples(
+      SynthCorpus.pages(spark, StreamDocs, seed = StreamSeed))
       .dropDuplicates("docId", "subj", "frame", "pred", "obj")
     put(streamTriples, "stream_expected")
 

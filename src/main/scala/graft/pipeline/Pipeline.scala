@@ -2,7 +2,8 @@ package graft.pipeline
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
+import org.apache.spark.sql.functions.col
 
 import graft.extract.{HtmlText, Segmenter}
 import graft.frames.FrameDetect
@@ -50,13 +51,27 @@ object Pipeline {
     TripleEmitter.convert(p.url, frames.toVector, entities)
   }
 
-  def triples(pages: Dataset[PageRow], cfg: Config = Config()): Dataset[Triple] = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    pages.mapPartitions { it =>
-      val dict = cfg.dictionary // resolve once per partition
-      val c = cfg.copy(dict = dict)
-      it.flatMap(p => convertPage(p, c))
-    }
+  def triples(pages: Dataset[PageRow]): Dataset[Triple] = {
+    import pages.sparkSession.implicits._
+    convertPartitions(pages)((_, ts) => ts)
   }
+
+  /** `triples` with each page's `warc_ts` kept next to its triples.
+    * Output columns: warc_ts + the Triple fields.
+    */
+  def timestampedTriples(pages: Dataset[PageRow]): DataFrame = {
+    import pages.sparkSession.implicits._
+    convertPartitions(pages)((p, ts) => ts.map(t => (p.warc_ts, t)))
+      .select(col("_1").as("warc_ts"), col("_2.*"))
+  }
+
+  /** The one partition loop over `convertPage`: `out` shapes each page's
+    * triples into rows. The Config is resolved once per partition.
+    */
+  private def convertPartitions[A: Encoder](pages: Dataset[PageRow])(
+      out: (PageRow, Vector[Triple]) => IterableOnce[A]): Dataset[A] =
+    pages.mapPartitions { it =>
+      val cfg = Config(dict = AliasDict.default)
+      it.flatMap(p => out(p, convertPage(p, cfg)))
+    }
 }

@@ -36,22 +36,10 @@ object StreamingPipeline {
   /** Streaming triples with event-time + cross-batch dedup within the
     * watermark. Output columns: warc_ts + the Triple fields.
     */
-  def triples(
-      pages: Dataset[PageRow],
-      cfg: Pipeline.Config = Pipeline.Config(),
-      watermark: String = "1 hour"): DataFrame = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    pages
-      .mapPartitions { it =>
-        val c = cfg.copy(dict = cfg.dictionary)
-        it.flatMap(p => Pipeline.convertPage(p, c).map(t => (p.warc_ts, t)))
-      }
-      .select(org.apache.spark.sql.functions.col("_1").as("warc_ts"),
-        org.apache.spark.sql.functions.col("_2.*"))
+  def triples(pages: Dataset[PageRow], watermark: String = "1 hour"): DataFrame =
+    Pipeline.timestampedTriples(pages)
       .withWatermark("warc_ts", watermark)
       .dropDuplicatesWithinWatermark("docId", "subj", "frame", "pred", "obj")
-  }
 
   /** Stateful recrawl handling: across micro-batches, emit a page only
     * when its `warc_ts` is strictly newer than the newest version of the
@@ -115,7 +103,10 @@ object StreamingPipeline {
       .queryName(name)
       .option("checkpointLocation", s"$storeDir/_checkpoint")
       .foreachBatch { (batch: Dataset[PageRow], _: Long) =>
-        graft.io.TripleStore.upsertDocs(Pipeline.triples(batch), storeDir, units)
+        // the batch's urls name the replaced docs: a recrawl that emits no
+        // triples must still drop its old ones
+        graft.io.TripleStore.upsertDocs(
+          Pipeline.triples(batch), batch.select("url").as(Encoders.STRING), storeDir, units)
         ()
       }
       .trigger(Trigger.AvailableNow())

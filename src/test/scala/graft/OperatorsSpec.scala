@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.canon.{Canonicalize, Skew}
+import graft.canon.Canonicalize
 import graft.dedup.{MinHashLsh, SimHash}
 import graft.extract.{Chunker, Segmenter}
 import graft.io.Exports
@@ -175,14 +175,6 @@ class OperatorsSpec extends AnyFunSuite {
     // the writer-scoped overwrite mode did not mutate the session conf
     assert(spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
       == overwriteModeBefore)
-  }
-
-  test("salted aggregation equals direct aggregation") {
-    import spark.implicits._
-    val df = Seq.tabulate(1000)(i => (i % 7, i.toDouble)).toDF("k", "v")
-    val direct = df.groupBy("k").count().as[(Int, Long)].collect().toMap
-    val salted = Skew.saltedCount(df, "k").as[(Int, Long)].collect().toMap
-    assert(salted == direct)
   }
 
   test("exports produce the reference shapes (re-parse semantics)") {

@@ -102,6 +102,14 @@ class PipelineSpec extends AnyFunSuite {
       .select("subj", "pred", "obj").as[(String, String, String)]
       .collect().toSet
     assert(resumed == full, "resumed triple set differs from original")
+    // every row sits in its page's unit, and the store holds exactly the
+    // pipeline's triples
+    val stored = spark.read.parquet(s"$dir/data")
+    assert(stored.filter(col("unit") =!= pmod(xxhash64(col("docId")), lit(8))).isEmpty)
+    val tripleCols = Seq("docId", "subj", "frame", "role", "pred", "obj").map(col)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.select(tripleCols: _*)
+      .as[(String, String, String, String, String, String)].collect().sorted.toSeq
+    assert(rows(stored) == rows(Pipeline.triples(pages).toDF()))
 
     // third run: nothing pending, and nothing under the store changes
     def snapshot() = Files.walk(Paths.get(dir)).iterator.asScala

@@ -2,8 +2,11 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.model.PageRow
 import graft.pipeline.{Pipeline, SynthCorpus}
 import graft.similarity.Ann
 import graft.streaming.StreamingPipeline
@@ -87,6 +90,38 @@ class StreamingAnnSpec extends AnyFunSuite {
     // recrawled docs were REPLACED (old-only triples gone), new docs added
     assert(after2 == expect2)
     assert(after2 != after1)
+  }
+
+  test("streamToStore drops the old triples of a recrawl that emits none") {
+    import spark.implicits._
+    def emptied(p: PageRow) = p.copy(
+      warc_ts = new java.sql.Timestamp(p.warc_ts.getTime + 86400000L), html = null, text = "")
+    def stored(store: String) = spark.read.parquet(s"$store/data")
+      .select("docId", "subj", "frame", "pred", "obj")
+      .as[(String, String, String, String, String)].collect().toSet
+    val dir = Files.createTempDirectory("pages_emptied").toString
+    val store = Files.createTempDirectory("store_emptied").toString
+    val b1 = SynthCorpus.pages(spark, 10, seed = 34L)
+    b1.write.mode("overwrite").parquet(s"$dir/b1")
+    StreamingPipeline.streamToStore(spark, s"$dir/b*", store, units = 4)
+    val before = stored(store)
+    // recrawl one url, a day newer, with no html and empty text
+    val gone = b1.head()
+    assert(before.exists(_._1 == gone.url))
+    Seq(emptied(gone)).toDS().write.mode("overwrite").parquet(s"$dir/b2")
+    StreamingPipeline.streamToStore(spark, s"$dir/b*", store, units = 4)
+    assert(stored(store) == before.filter(_._1 != gone.url))
+
+    // a unit whose only page is recrawled empty loses its partition
+    val soloDir = Files.createTempDirectory("pages_solo").toString
+    val solo = Files.createTempDirectory("store_solo").toString
+    Seq(gone).toDS().write.mode("overwrite").parquet(s"$soloDir/b1")
+    StreamingPipeline.streamToStore(spark, s"$soloDir/b*", solo, units = 4)
+    assert(stored(solo).nonEmpty)
+    Seq(emptied(gone)).toDS().write.mode("overwrite").parquet(s"$soloDir/b2")
+    StreamingPipeline.streamToStore(spark, s"$soloDir/b*", solo, units = 4)
+    assert(!Files.walk(java.nio.file.Paths.get(solo, "data")).iterator.asScala
+      .exists(_.getFileName.toString.endsWith(".parquet")))
   }
 
   /** Deterministic clustered unit vectors — the realistic embedding shape
