@@ -38,14 +38,7 @@ object Canonicalize {
   def sameAsEdges(
       mentionUri: DataFrame,
       ambiguousSurfaces: Set[String]): DataFrame = {
-    val spark = mentionUri.sparkSession
-    import spark.implicits._
-    val amb = ambiguousSurfaces.toSeq.sorted.toDF("m")
-    val m = mentionUri
-      .select(lower(col("mention")).as("m"), col("uri"))
-      .filter(col("uri").startsWith("http"))
-      .join(broadcast(amb), Seq("m"), "left_anti")
-      .distinct()
+    val m = surfaces(mentionUri, ambiguousSurfaces).distinct()
     // per-mention min URI as hub → star edges, avoids quadratic pair blowup
     val hubs = m.groupBy("m").agg(min("uri").as("hub"))
     m.join(hubs, "m")
@@ -53,6 +46,16 @@ object Canonicalize {
       .select(col("uri").as("src"), col("hub").as("dst"))
       .distinct()
   }
+
+  /** The (m, uri) rows sameAs edges come from: lowercased mention
+    * surfaces with http(s) URIs, ambiguous surfaces dropped. A null
+    * surface is dropped too, as it could never join its hub. Over a local
+    * table the optimizer folds this into a local table, so no job runs.
+    */
+  private def surfaces(mentionUri: DataFrame, ambiguousSurfaces: Set[String]): DataFrame =
+    mentionUri.select(lower(col("mention")).as("m"), col("uri"))
+      .filter(col("m").isNotNull && col("uri").startsWith("http") &&
+        !col("m").isin(ambiguousSurfaces.toSeq.sorted: _*))
 
   /** Default exclusion list: every surface the disambiguation dictionary
     * lists >1 candidate URI for (link.Disambiguator.isAmbiguous).
@@ -134,7 +137,10 @@ object Canonicalize {
       convergeEvery: Int = 2): DataFrame =
     connectedComponents(edges, maxIter, checkpointDir, convergeEvery,
       encodeMinEdges = 1000000L, encodeMinBytesPerName = 16.0,
-      localMaxEdges = 100000L)
+      localMaxEdges = LocalMaxRows)
+
+  /** Largest edge list (or alias table) solved on the driver by default. */
+  private val LocalMaxRows = 100000L
 
   /** DEFLATE-compressed bytes per node name over a bounded driver-side
     * sample — the shuffle-cost proxy the encode decision needs. Shuffle
@@ -450,10 +456,38 @@ object Canonicalize {
       ambiguousSurfaces: Set[String],
       checkpointDir: Option[String] = None,
       hintBroadcastMapping: Boolean = false): Dataset[Triple] = {
-    val cc = connectedComponents(
-      sameAsEdges(mentionUri, ambiguousSurfaces), checkpointDir = checkpointDir)
+    val cc = aliasMapping(mentionUri, ambiguousSurfaces, checkpointDir)
     val mapping = if (hintBroadcastMapping) broadcast(cc) else cc
+    // also drops duplicates the input already held
     rewrite(triples, mapping).dropDuplicates("docId", "subj", "frame", "pred", "obj")
+  }
+
+  /** The (node, component) alias mapping, as
+    * `connectedComponents(sameAsEdges(mentionUri, ambiguousSurfaces))`.
+    * An alias table estimated at most `LocalMaxRows` rows is pulled once,
+    * bounded, and solved on the driver: each mention's URIs are unioned,
+    * with the same representative as the distributed path. A table that
+    * holds more rows than its estimate falls through to the distributed
+    * path. An empty mapping is then a local table, and the optimizer drops
+    * the rewrite joins against it.
+    */
+  private[graft] def aliasMapping(
+      mentionUri: DataFrame,
+      ambiguousSurfaces: Set[String],
+      checkpointDir: Option[String]): DataFrame = {
+    if (estimatedRows(mentionUri) <= LocalMaxRows) {
+      val rows = surfaces(mentionUri, ambiguousSurfaces)
+        .limit(LocalMaxRows.toInt + 1).collect()
+      if (rows.length <= LocalMaxRows) {
+        // a star over each mention's distinct URIs joins them all
+        val edges = rows.map(r => (r.getString(0), r.getString(1))).distinct
+          .groupBy(_._1).valuesIterator
+          .flatMap(mus => mus.tail.map { case (_, uri) => (uri, mus.head._2) })
+          .toSeq
+        return localUnionFind(mentionUri.sparkSession, edges)
+      }
+    }
+    connectedComponents(sameAsEdges(mentionUri, ambiguousSurfaces), checkpointDir = checkpointDir)
   }
 
   def canonicalize(triples: Dataset[Triple], mentionUri: DataFrame): Dataset[Triple] =

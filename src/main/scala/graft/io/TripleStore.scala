@@ -6,7 +6,7 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Dataset, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.{PageRow, Triple}
@@ -57,11 +57,22 @@ object TripleStore {
       .sortWithinPartitions(key, "subj", "pred", "obj")
   }
 
+  /** The writer of every store write. Its options put `file:` paths on
+    * `NoForkLocalFileSystem` for this write's Hadoop conf only; the cache
+    * is bypassed because it keys file systems by scheme and user, not by
+    * conf. The session's conf, its cached file system and every reader
+    * stay as they are, and other schemes ignore both keys.
+    */
+  private def storeWriter(df: DataFrame): DataFrameWriter[Row] =
+    df.write
+      .option("fs.file.impl", classOf[NoForkLocalFileSystem].getName)
+      .option("fs.file.impl.disable.cache", "true")
+
   /** Plain bucketed write of a triple Dataset (no resume bookkeeping). */
   def write(triples: Dataset[Triple], path: String, buckets: Int = 32): Unit = {
-    clustered(triples.toDF().withColumn("bucket", bucketOf(col("subj"), buckets)),
-      "bucket", 0 until buckets)
-      .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(path)
+    storeWriter(clustered(triples.toDF().withColumn("bucket", bucketOf(col("subj"), buckets)),
+      "bucket", 0 until buckets))
+      .mode(SaveMode.Overwrite).partitionBy("bucket").parquet(path)
   }
 
   def read(spark: SparkSession, path: String): DataFrame =
@@ -101,7 +112,8 @@ object TripleStore {
     if (affected.isEmpty) return Seq.empty
     val withUnit = newTriples.toDF().withColumn("unit", bucketOf(col("docId"), units))
     val main = dataDir(outDir)
-    val staging = s"$outDir/_staging"
+    // no leading '_' or '.': Spark's file index would take it for hidden
+    val staging = s"$outDir/staging"
     // staging is per-batch scratch: clear it first, so unit partitions from
     // EARLIER batches can't leak into this batch's second hop (they would
     // both grow each write toward a full-store rewrite and silently revert
@@ -119,8 +131,8 @@ object TripleStore {
     // overwrite mode scoped to the writer, not the session conf — mutating
     // the session would silently flip TripleStore.write's later
     // SaveMode.Overwrite from truncate to dynamic semantics
-    clustered(combined, "unit", affected)
-      .write.mode(SaveMode.Overwrite)
+    storeWriter(clustered(combined, "unit", affected))
+      .mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("unit").parquet(staging)
     // a unit with no rows left stages no partition, and dynamic overwrite
@@ -130,10 +142,10 @@ object TripleStore {
     // no exchange: each staged unit file is read whole by one task; the
     // sort keeps the subject order the planned write's Sort [unit] drops
     if (staged.nonEmpty)
-      spark.read.parquet(staging)
+      storeWriter(spark.read.parquet(staging)
         .filter(col("unit").isin(staged: _*))
-        .sortWithinPartitions("unit", "subj", "pred", "obj")
-        .write.mode(SaveMode.Overwrite)
+        .sortWithinPartitions("unit", "subj", "pred", "obj"))
+        .mode(SaveMode.Overwrite)
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("unit").parquet(main)
     emptied.foreach(u => fs.delete(new Path(s"$main/unit=$u"), true))
@@ -209,8 +221,8 @@ object TripleStore {
     val triples = Pipeline.triples(pending.as[PageRow])
       .withColumn("unit", bucketOf(col("docId"), units))
 
-    clustered(triples, "unit", pendingUnits)
-      .write.mode(SaveMode.Overwrite)
+    storeWriter(clustered(triples, "unit", pendingUnits))
+      .mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("unit").parquet(dataDir(outDir))
 

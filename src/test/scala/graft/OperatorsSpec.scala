@@ -97,6 +97,101 @@ class OperatorsSpec extends AnyFunSuite {
     assert(overflowDir.listFiles().nonEmpty, "overflow did not reach the distributed path")
   }
 
+  test("alias mapping: driver path equals the distributed path on every route") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val amb = Set("chinese")
+    val rows = Seq(
+      ("Alpha", "http://x/A"), ("ALPHA", "http://x/A3"), ("alpha", "http://x/A2"),
+      ("alpha", "http://x/A2"), // duplicate row
+      ("Chinese", "http://x/China"), ("chinese", "http://x/Chinese_language"), // ambiguous
+      ("beta", "urn:x:B"), ("beta", "ftp://x/B2"), ("beta", "http://x/B"), // non-http
+      (null, "http://x/N1"), (null, "http://x/N2"), // null mention
+      ("gamma", null), ("gamma", "http://x/G"), ("gamma", "http://x/G2"), // null uri
+      ("delta", "http://x/D1"), ("delta", "http://x/D2"), // chained to epsilon
+      ("epsilon", "http://x/D2"), ("Epsilon", "http://x/E"),
+      // U+FFFD sorts before U+1F600 in UTF-8 bytes, after it in UTF-16
+      ("emoji", "http://x/\uD83D\uDE00"), ("emoji", "http://x/\uFFFD"))
+    val local = rows.toDF("mention", "uri")
+    val parquetDir = java.nio.file.Files.createTempDirectory("alias_table").resolve("t").toString
+    local.write.parquet(parquetDir)
+    val parquet = spark.read.parquet(parquetDir)
+    // the estimate of a cross join with a filtered 200k-row range is far
+    // above the bound; the table still holds the same rows
+    val overEstimated = local.crossJoin(spark.range(200000).filter(col("id") === 0))
+      .select("mention", "uri")
+    val triples = Seq(
+      Triple("d1", "http://x/A2", true, "F", "R", "has_theme", "http://x/E", true),
+      Triple("d1", "http://x/A", true, "F", "R", "has_theme", "http://x/D1", true),
+      Triple("d1", "http://x/A", true, "F", "R", "has_theme", "http://x/D1", true),
+      Triple("d2", "http://x/\uD83D\uDE00", true, "F", "R", "has_theme", "lit", false),
+      Triple("d2", "http://x/China", true, "F", "R", "has_theme", "http://x/N1", true))
+      .toDS()
+    def sorted(ts: org.apache.spark.sql.Dataset[Triple]) =
+      ts.collect().toSeq.sortBy(t => (t.docId, t.subj, t.pred, t.obj))
+
+    for ((route, table) <- Seq("local" -> local, "parquet" -> parquet,
+        "over-estimated" -> overEstimated)) {
+      val distributed = Canonicalize.connectedComponents(
+        Canonicalize.sameAsEdges(table, amb), 20, None, 2,
+        encodeMinEdges = 1000000L, encodeMinBytesPerName = 16.0, localMaxEdges = 0L)
+      val want = distributed.as[(String, String)].collect().toSet
+      val ckpt = java.nio.file.Files.createTempDirectory("alias_ckpt").toFile
+      val got = Canonicalize.aliasMapping(table, amb, Some(ckpt.toString))
+        .as[(String, String)].collect().toSet
+      assert(got == want, route)
+      // only the distributed path checkpoints
+      assert(ckpt.listFiles().nonEmpty == (route == "over-estimated"), route)
+      assert(sorted(Canonicalize.canonicalize(triples, table, amb)) ==
+        sorted(Canonicalize.rewrite(triples, distributed)
+          .dropDuplicates("docId", "subj", "frame", "pred", "obj")), route)
+    }
+    val byNode = Canonicalize.aliasMapping(local, amb, None)
+      .as[(String, String)].collect().toMap
+    assert(byNode == Map(
+      "http://x/A" -> "http://x/A", "http://x/A2" -> "http://x/A", "http://x/A3" -> "http://x/A",
+      "http://x/G" -> "http://x/G", "http://x/G2" -> "http://x/G",
+      "http://x/D1" -> "http://x/D1", "http://x/D2" -> "http://x/D1", "http://x/E" -> "http://x/D1",
+      "http://x/\uD83D\uDE00" -> "http://x/\uFFFD", "http://x/\uFFFD" -> "http://x/\uFFFD"))
+  }
+
+  test("canonicalize over an edge-free local alias table runs no job and joins nothing") {
+    import spark.implicits._
+    import org.apache.spark.TestBus
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val triples = Seq(
+      Triple("d1", "http://x/A", true, "F", "R", "has_theme", "http://x/B", true),
+      Triple("d1", "http://x/A", true, "F", "R", "has_theme", "http://x/B", true),
+      Triple("d2", "http://x/B", true, "F", "R", "has_theme", "lit", false)).toDS()
+    // every mention resolves to one URI once ambiguous and non-http rows go
+    val mentionUri = Seq(("alpha", "http://x/A"), ("Alpha", "http://x/A"),
+      ("beta", "http://x/B"), ("beta", "urn:x:B"),
+      ("chinese", "http://x/China"), ("chinese", "http://x/Chinese_language"))
+      .toDF("mention", "uri")
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    for (hint <- Seq(false, true)) {
+      TestBus.drain(sc)
+      sc.addSparkListener(listener)
+      val canon =
+        try {
+          val c = Canonicalize.canonicalize(triples, mentionUri, Set("chinese"),
+            hintBroadcastMapping = hint)
+          TestBus.drain(sc)
+          c
+        } finally sc.removeSparkListener(listener)
+      assert(jobs.get == 0, s"hint=$hint: $jobs jobs before the triples were consumed")
+      val joins = canon.queryExecution.optimizedPlan.collect {
+        case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+      }
+      assert(joins.isEmpty, s"hint=$hint: ${canon.queryExecution.optimizedPlan}")
+      assert(canon.collect().toSet == triples.collect().toSet && canon.count() == 2)
+    }
+  }
+
   test("rewrite: shuffle-join path (no broadcast) matches the broadcast path") {
     import spark.implicits._
     val triples = Seq(
@@ -165,7 +260,7 @@ class OperatorsSpec extends AnyFunSuite {
     // the round-2 bug: staging accumulated unit partitions across batches,
     // so batch 2's second hop rewrote (and could silently revert) batch
     // 1's units. Staging must now hold ONLY batch 2's unit.
-    val stagingUnits = spark.read.parquet(s"$store/_staging")
+    val stagingUnits = spark.read.parquet(s"$store/staging")
       .select("unit").distinct().as[Int].collect().toSet
     assert(stagingUnits == u2.toSet, s"staging leaked units: $stagingUnits vs $u2")
     // both docs present in main
@@ -175,6 +270,46 @@ class OperatorsSpec extends AnyFunSuite {
     // the writer-scoped overwrite mode did not mutate the session conf
     assert(spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
       == overwriteModeBefore)
+  }
+
+  test("upsertDocs reads its staging back without DataSource warnings") {
+    import spark.implicits._
+    import graft.io.TripleStore
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val logger = LogManager.getLogger(
+      "org.apache.spark.sql.execution.datasources.DataSource").asInstanceOf[Logger]
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val capture = new AbstractAppender("capture-datasource", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        warnings.add(s"${e.getLevel} ${e.getMessage.getFormattedMessage}")
+    }
+    capture.start()
+    logger.addAppender(capture)
+    try {
+      // the capture sees the warning a hidden input path raises
+      val hidden = java.nio.file.Files.createTempDirectory("hidden_read").resolve("_t").toString
+      Seq(1).toDF("x").write.parquet(hidden)
+      spark.read.parquet(hidden).collect()
+      assert(warnings.toArray.exists(_.toString.contains("All paths were ignored")))
+      warnings.clear()
+
+      val store = java.nio.file.Files.createTempDirectory("upsert_warn").toString
+      def batch(v: String) = Seq(
+        Triple("u1", "http://x/A", true, "F", "R", "has_theme", v, false),
+        Triple("u2", "http://x/B", true, "F", "R", "has_theme", v, false)).toDS()
+      TripleStore.upsertDocs(batch("old"), store, units = 4)
+      TripleStore.upsertDocs(batch("new"), store, units = 4)
+      assert(spark.read.parquet(s"$store/data").select("obj").as[String].collect().toSet
+        == Set("new"))
+      assert(warnings.isEmpty, warnings.toArray.mkString("\n"))
+    } finally {
+      logger.removeAppender(capture)
+      capture.stop()
+    }
   }
 
   test("exports produce the reference shapes (re-parse semantics)") {

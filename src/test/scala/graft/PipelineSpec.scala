@@ -12,7 +12,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
 
 import graft.extract.HtmlText
-import graft.io.TripleStore
+import graft.io.{NoForkLocalFileSystem, TripleStore}
 import graft.link.AliasDict
 import graft.model.PageRow
 import graft.pipeline.{Pipeline, SynthCorpus}
@@ -186,6 +186,52 @@ class PipelineSpec extends AnyFunSuite {
         val firstBad = rows.indices.drop(1).find(i => cmp(rows(i - 1), rows(i)) > 0)
         assert(firstBad.isEmpty, s"$f out of (subj, pred, obj) order at row $firstBad")
       }
+    }
+  }
+
+  test("store writes keep POSIX permissions and set them without forking") {
+    import spark.implicits._
+    val pages = SynthCorpus.pages(spark, 24, seed = 9L)
+    val triples = Pipeline.triples(pages)
+    /** Permissions by kind of entry (directory, part file, checksum,
+      * marker) under `root`, itself included. */
+    def perms(root: String): Map[String, Set[String]] =
+      Files.walk(Paths.get(root)).iterator.asScala
+        .map { p =>
+          val name = p.getFileName.toString
+          val kind =
+            if (Files.isDirectory(p)) "dir"
+            else if (name.endsWith(".crc")) "crc"
+            else if (name.startsWith("part-")) "part"
+            else name
+          kind -> java.nio.file.attribute.PosixFilePermissions.toString(
+            Files.getPosixFilePermissions(p))
+        }.toVector.groupMap(_._1)(_._2).view.mapValues(_.toSet).toMap
+    // the same kinds of entries written through the session's file system
+    val plain = Files.createTempDirectory("perm_plain").resolve("out").toString
+    triples.toDF().withColumn("unit", TripleStore.bucketOf(col("docId"), 4))
+      .write.partitionBy("unit").parquet(plain)
+    val want = perms(plain)
+    assert(Set("dir", "crc", "part", "_SUCCESS").subsetOf(want.keySet), want)
+    assert(want.values.forall(_.size == 1), want)
+
+    def viaNoFork(body: => Unit): Unit = {
+      val before = NoForkLocalFileSystem.setPermissionCalls.get
+      body
+      assert(NoForkLocalFileSystem.setPermissionCalls.get > before)
+    }
+    val written = Files.createTempDirectory("perm_write").toString
+    viaNoFork(TripleStore.write(triples, s"$written/data", buckets = 4))
+    val ckpt = Files.createTempDirectory("perm_ckpt").toString
+    viaNoFork(TripleStore.runCheckpointed(pages, ckpt, units = 4))
+    val upserted = Files.createTempDirectory("perm_upsert").toString
+    viaNoFork(TripleStore.upsertDocs(triples, upserted, units = 4))
+    viaNoFork(TripleStore.upsertDocs(Pipeline.triples(pages.limit(5)), upserted, units = 4))
+    for (root <- Seq(s"$written/data", s"$ckpt/data", s"$upserted/data", s"$upserted/staging")) {
+      // dynamic partition overwrites leave no _SUCCESS marker
+      val got = perms(root)
+      assert(Set("dir", "crc", "part").subsetOf(got.keySet), s"$root: $got")
+      assert(got == want.view.filterKeys(got.keySet).toMap, s"$root: $got vs $want")
     }
   }
 
