@@ -124,6 +124,25 @@ class StreamingAnnSpec extends AnyFunSuite {
       .exists(_.getFileName.toString.endsWith(".parquet")))
   }
 
+  /** Brute-force exact top-k, the reference the ANN paths are gated
+    * against: |q|×|n| via broadcast.
+    */
+  private def bruteTopK(
+      vectors: org.apache.spark.sql.Dataset[(Long, Array[Float])],
+      queryFilter: Long => Boolean,
+      k: Int): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{broadcast, col}
+    val q = vectors.filter(v => queryFilter(v._1)).toDF("qid", "qv")
+    val n = broadcast(vectors.toDF("nid", "nv"))
+    val pairs = q.crossJoin(n).filter(col("qid") =!= col("nid"))
+      .as[(Long, Array[Float], Long, Array[Float])]
+      .map { case (qid, qv, nid, nv) =>
+        (qid, nid, math.floor(Ann.dot(qv, nv) * 1e5 + 0.5) / 1e5)
+      }.toDF("qid", "nid", "sim")
+    Ann.topK(pairs, k)
+  }
+
   /** Deterministic clustered unit vectors — the realistic embedding shape
     * (documents cluster by topic), where the ≥0.9 recall gate must hold.
     */
@@ -152,7 +171,7 @@ class StreamingAnnSpec extends AnyFunSuite {
     import spark.implicits._
     val vecs = clusteredVecs(nClusters = 30, perCluster = 20).toDS().cache()
     val k = 5
-    val exact = Ann.bruteTopK(vecs, _ < 100, k)
+    val exact = bruteTopK(vecs, _ < 100, k)
       .select("qid", "nid").as[(Long, Long)].collect().toSet
     val lsh = Ann.lshTopK(vecs, k = k, tables = 12, bits = 8)
       .filter(org.apache.spark.sql.functions.col("qid") < 100)
@@ -177,12 +196,12 @@ class StreamingAnnSpec extends AnyFunSuite {
     // the 4x storage cut
     val vecs = clusteredVecs(nClusters = 30, perCluster = 20).toDS().cache()
     val k = 5
-    val exact = Ann.bruteTopK(vecs, _ < 100, k)
+    val exact = bruteTopK(vecs, _ < 100, k)
       .select("qid", "nid").as[(Long, Long)].collect().toSet
     val dequantized = Quantize.int8(vecs)
       .as[(Long, Double, Array[Byte])]
       .map { case (id, scale, codes) => (id, Quantize.dequantize(scale, codes)) }
-    val viaInt8 = Ann.bruteTopK(dequantized, _ < 100, k)
+    val viaInt8 = bruteTopK(dequantized, _ < 100, k)
       .select("qid", "nid").as[(Long, Long)].collect().toSet
     val overlap = (exact & viaInt8).size.toDouble / exact.size
     info(f"int8-dequantized top-$k overlap = $overlap%.3f")
@@ -214,12 +233,14 @@ class StreamingAnnSpec extends AnyFunSuite {
     info(f"int8 ivf overlap vs float = $ivfOverlap%.3f")
     assert(ivfOverlap >= 0.9, f"int8 ivf overlap $ivfOverlap%.3f below 0.9")
     // and the quantized sims are the EXACT rescaled integer dots
-    val resims = Ann.lshTopKI8(q, k = k, tables = 12, bits = 8)
-      .select("qid", "nid", "sim").as[(Long, Long, Double)].collect()
     val byId = q.collect().map(r => r._1 -> ((r._2, r._3))).toMap
-    resims.foreach { case (a, b, sim) =>
-      val (sa, ca) = byId(a); val (sb, cb) = byId(b)
-      assert(sim == Ann.simI8(sa, ca, sb, cb))
+    Seq(Ann.lshTopKI8(q, k = k, tables = 12, bits = 8),
+        Ann.ivfTopKI8(q, k = k, nlist = 16, nprobe = 6)).foreach { found =>
+      found.select("qid", "nid", "sim").as[(Long, Long, Double)].collect()
+        .foreach { case (a, b, sim) =>
+          val (sa, ca) = byId(a); val (sb, cb) = byId(b)
+          assert(sim == Ann.simI8(sa, ca, sb, cb))
+        }
     }
     q.unpersist(); vecs.unpersist()
   }
@@ -277,12 +298,18 @@ class StreamingAnnSpec extends AnyFunSuite {
     assert(assigned.length > 4, "hot bucket was not sub-sharded")
     assert(assigned.map(_._3).max <= 48, // hash-balanced around 16
       s"shard blew past the cap: ${assigned.map(_._3).max}")
-    // sharding must be invisible in the results
-    val capped = Ann.lshTopK(vecs, k = 3, tables = 2, bits = 4, bucketCap = 16)
-      .select("qid", "nid", "sim").as[(Long, Long, Double)].collect().toSet
-    val uncapped = Ann.lshTopK(vecs, k = 3, tables = 2, bits = 4, bucketCap = 1 << 20)
-      .select("qid", "nid", "sim").as[(Long, Long, Double)].collect().toSet
-    assert(capped == uncapped)
+    // sharding must be invisible in the results, float and int8 alike
+    val quant = graft.similarity.Quantize.int8(vecs).as[(Long, Double, Array[Byte])]
+    Seq[Int => org.apache.spark.sql.DataFrame](
+      cap => Ann.lshTopK(vecs, k = 3, tables = 2, bits = 4, bucketCap = cap),
+      cap => Ann.lshTopKI8(quant, k = 3, tables = 2, bits = 4, bucketCap = cap)
+    ).foreach { search =>
+      val capped = search(16)
+        .select("qid", "nid", "sim").as[(Long, Long, Double)].collect().toSet
+      val uncapped = search(1 << 20)
+        .select("qid", "nid", "sim").as[(Long, Long, Double)].collect().toSet
+      assert(capped.nonEmpty && capped == uncapped)
+    }
   }
 
   test("lsh ann reaches usable recall vs brute force on real embeddings") {
@@ -290,7 +317,7 @@ class StreamingAnnSpec extends AnyFunSuite {
     val vecs = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select("vec_id", "embedding").as[(Long, Array[Float])].cache()
     val k = 5
-    val exact = Ann.bruteTopK(vecs, _ < 50, k)
+    val exact = bruteTopK(vecs, _ < 50, k)
       .select("qid", "nid").as[(Long, Long)].collect().toSet
     val approx = Ann.lshTopK(vecs, k = k, tables = 24, bits = 6)
       .filter(org.apache.spark.sql.functions.col("qid") < 50)
