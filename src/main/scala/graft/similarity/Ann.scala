@@ -1,13 +1,11 @@
 package graft.similarity
 
 import scala.collection.parallel.CollectionConverters._
-import scala.reflect.runtime.universe.TypeTag
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-/** Approximate nearest neighbors over an embedding column, stored either
-  * as float32 vectors or as int8 `(scale, codes)` ([[Quantize.int8]]).
+/** Approximate nearest neighbors over an embedding column.
   *
   * Scale path: random-hyperplane LSH — each vector gets `tables` signatures
   * of `bits` sign-bits; candidates are pairs sharing any (table, signature)
@@ -17,13 +15,16 @@ import org.apache.spark.sql.functions._
   *
   * Hot-bucket bound: a skewed bucket (duplicate-heavy corpora, a dense
   * cluster) used to land in ONE task as an unbounded in-memory array.
-  * [[pairSims]] sub-shards every bucket above `bucketCap` members
+  * [[boundedPairSimsRaw]] sub-shards every bucket above `bucketCap` members
   * by id-hash and replicates probes across the shards — per-task member
   * arrays stay ≤ ~cap while probes STREAM through the cogroup iterator,
   * so task memory is bounded no matter how hot the bucket.
   *
-  * Both storage formats run the same search; a private [[Codec]], picked
-  * by the entry point's input type, supplies only the per-vector kernels.
+  * The int8 `(scale, codes)` search keeps its own typed twin of the
+  * keying, probe and rerank loops: folding both formats into one generic
+  * search was measured 8–15% slower on the int8 searches (BENCH.md, "ANN:
+  * one search path"). Shard assignment, the LSH key layout and [[topK]]
+  * are shared.
   */
 object Ann {
 
@@ -61,6 +62,24 @@ object Ann {
       (table.toLong << 40) | (bits.toLong << 20) | dim.toLong,
       _ => Array.tabulate(bits * dim)(i => gauss(table, i / dim, i % dim)))
 
+  def signature(vec: Array[Float], table: Int, bits: Int): Long = {
+    val p = planes(table, bits, vec.length)
+    var sig = 0L
+    var b = 0
+    while (b < bits) {
+      var dot = 0.0
+      var d = 0
+      val off = b * vec.length
+      while (d < vec.length) {
+        dot += vec(d) * p(off + d)
+        d += 1
+      }
+      if (dot > 0) sig |= (1L << b)
+      b += 1
+    }
+    sig
+  }
+
   def dot(a: Array[Float], b: Array[Float]): Double = {
     var s = 0.0
     var i = 0
@@ -68,134 +87,29 @@ object Ann {
     s
   }
 
-  /** Integer dot over int8 codes — the bandwidth-bound kernel. Exact in
-    * Long (|codes| · 127² ≪ 2⁶³).
-    */
-  def dotI8(a: Array[Byte], b: Array[Byte]): Long = {
-    var s = 0L
-    var i = 0
-    while (i < a.length) { s += a(i).toInt * b(i).toInt; i += 1 }
-    s
-  }
-
-  /** Quantized pair similarity with the operator family's rounding:
-    * scale_a · scale_b · (integer dot), floor(x·1e5+0.5)/1e5.
-    */
-  @inline def simI8(sa: Double, ca: Array[Byte], sb: Double, cb: Array[Byte]): Double =
-    math.floor(sa * sb * dotI8(ca, cb).toDouble * 1e5 + 0.5) / 1e5
-
-  /** What the float32 and int8 searches do differently: the vector type
-    * (whose Spark encoder the tag derives) and the per-vector kernels.
-    * Each instance keeps its format's exact arithmetic, so running both
-    * through one search changes no output.
-    */
-  private sealed abstract class Codec[V](implicit val tag: TypeTag[V])
-      extends Serializable {
-    /** Pair similarity, rounded floor(x·1e5+0.5)/1e5 like the family. */
-    def sim(a: V, b: V): Double
-    /** `bits` random-hyperplane sign bits of table `table`. */
-    def signature(v: V, table: Int, bits: Int): Long
-    /** IVF cell score: the best cell assigns, the best `nprobe` probe. */
-    def cellScore(v: V, cent: Array[Float]): Double
-    /** The float vectors the coarse quantizer trains on. */
-    def floats(rows: Dataset[(Long, V)]): Dataset[(Long, Array[Float])]
-  }
-
-  private implicit object Float32 extends Codec[Array[Float]] {
-    def sim(a: Array[Float], b: Array[Float]): Double =
-      math.floor(dot(a, b) * 1e5 + 0.5) / 1e5
-
-    def signature(v: Array[Float], table: Int, bits: Int): Long = {
-      val p = planes(table, bits, v.length)
-      var sig = 0L
-      var b = 0
-      while (b < bits) {
-        var s = 0.0
-        var d = 0
-        val off = b * v.length
-        while (d < v.length) { s += v(d) * p(off + d); d += 1 }
-        if (s > 0) sig |= (1L << b)
-        b += 1
-      }
-      sig
-    }
-
-    def cellScore(v: Array[Float], cent: Array[Float]): Double = dot(v, cent)
-
-    def floats(rows: Dataset[(Long, Array[Float])]): Dataset[(Long, Array[Float])] = rows
-  }
-
-  /** Search over the quantized store WITHOUT dequantizing — the actual
-    * serve-time win of int8 storage: the rerank kernel reads
-    * 1 B/component instead of 4 (the memory-bandwidth-bound part of ANN
-    * at scale) and accumulates integer products, with ONE float multiply
-    * (scale_a · scale_b · acc) per pair instead of one per component.
-    * Neighbor overlap vs the float path is spec-gated ≥ 0.9
-    * (StreamingAnnSpec); the A/B timing lives in tools/I8AnnBench.
-    */
-  private implicit object Int8 extends Codec[(Double, Array[Byte])] {
-    def rows(vectors: Dataset[(Long, Double, Array[Byte])]): Dataset[(Long, (Double, Array[Byte]))] = {
-      val spark = vectors.sparkSession
-      import spark.implicits._
-      vectors.map { case (id, sc, cs) => (id, (sc, cs)) }
-    }
-
-    def sim(a: (Double, Array[Byte]), b: (Double, Array[Byte])): Double =
-      simI8(a._1, a._2, b._1, b._2)
-
-    // The per-vector scale is POSITIVE, so sign(Σ codeᵢ·scale·gᵢ) =
-    // sign(Σ codeᵢ·gᵢ): no dequantization and no scale (zero-scale
-    // vectors are all-zero codes → signature 0, deterministic).
-    def signature(v: (Double, Array[Byte]), table: Int, bits: Int): Long = {
-      val codes = v._2
-      val p = planes(table, bits, codes.length)
-      var sig = 0L
-      var b = 0
-      while (b < bits) {
-        var s = 0.0
-        var d = 0
-        val off = b * codes.length
-        while (d < codes.length) { s += codes(d).toInt * p(off + d); d += 1 }
-        if (s > 0) sig |= (1L << b)
-        b += 1
-      }
-      sig
-    }
-
-    // Σ codeᵢ·centᵢ ranks cells as the dequantized dot does, because
-    // scale > 0 is constant per vector. Each product is a float product.
-    def cellScore(v: (Double, Array[Byte]), cent: Array[Float]): Double = {
-      val codes = v._2
-      var s = 0.0
-      var d = 0
-      while (d < codes.length) { s += codes(d).toInt * cent(d); d += 1 }
-      s
-    }
-
-    // the tiny centroid table stays float, trained on the dequantized
-    // driver sample — centroid work is the cheap part
-    def floats(rows: Dataset[(Long, (Double, Array[Byte]))]): Dataset[(Long, Array[Float])] = {
-      val spark = rows.sparkSession
-      import spark.implicits._
-      rows.map { case (id, (sc, cs)) => (id, cs.map(c => (c * sc).toFloat)) }
-    }
-  }
-
   private def shardsCol(cap: Int) =
     greatest(ceil(col("n") / cap), lit(1)).cast("int")
 
-  /** Members with their (key, shard) assignment — shard count grows with
-    * bucket size so per-shard membership stays ≈ cap. Exposed for the
-    * boundedness test.
+  private def bucketSizes(members: DataFrame): DataFrame =
+    members.groupBy("key").agg(count(lit(1)).as("n"))
+
+  /** `(key, id, vector…)` members with their shard after the key — the
+    * shard count grows with bucket size so per-shard membership stays
+    * ≈ cap. Both the float and the int8 rerank shard through this.
     */
-  def shardAssignments[V](members: Dataset[(Long, Long, V)], cap: Int): DataFrame = {
-    val sizes = members.toDF("key", "id", "vec")
-      .groupBy("key").agg(count(lit(1)).as("n"))
-    members.toDF("key", "id", "vec")
-      .join(sizes, "key")
-      .select(col("key"),
-        pmod(xxhash64(col("id")), shardsCol(cap)).cast("int").as("shard"),
-        col("id"), col("vec"))
+  private def withShard(members: DataFrame, sizes: DataFrame, cap: Int): DataFrame =
+    members.join(sizes, "key").select(col("key") +:
+      pmod(xxhash64(col("id")), shardsCol(cap)).cast("int").as("shard") +:
+      members.columns.tail.toSeq.map(col): _*)
+
+  /** Float members `(key, id, vec)` with their (key, shard) assignment.
+    * Exposed for the boundedness test.
+    */
+  def shardAssignments(
+      members: Dataset[(Long, Long, Array[Float])],
+      cap: Int): DataFrame = {
+    val m = members.toDF("key", "id", "vec")
+    withShard(m, bucketSizes(m), cap)
   }
 
   /** Exact pair similarities inside buckets, with hot buckets sub-sharded
@@ -211,25 +125,23 @@ object Ann {
     * global dedup shuffle over the full stream was measured as the
     * dominant sf1 cost of q42/q52.
     */
-  private def pairSims[V](
-      members: Dataset[(Long, Long, V)],
-      probes: Dataset[(Long, Long, V)],
-      cap: Int)(implicit codec: Codec[V]): DataFrame = {
-    import codec.tag
+  private def boundedPairSimsRaw(
+      members: Dataset[(Long, Long, Array[Float])],
+      probes: Dataset[(Long, Long, Array[Float])],
+      cap: Int): DataFrame = {
     val spark = members.sparkSession
     import spark.implicits._
     // NOTE (r6): caching this into a CacheScope was tried and REVERTED —
     // it is referenced by both the member and the probe join, but the
     // cache's materialization barrier measured uniformly SLOWER at sf0.1
     // (q61 +0.4 s, q79 +0.2 s) than letting both subtrees evaluate it
-    val sizes = members.toDF("key", "id", "vec")
-      .groupBy("key").agg(count(lit(1)).as("n"))
-    val m = shardAssignments(members, cap)
-      .as[(Long, Int, Long, V)]
+    val mdf = members.toDF("key", "id", "vec")
+    val sizes = bucketSizes(mdf)
+    val m = withShard(mdf, sizes, cap).as[(Long, Int, Long, Array[Float])]
     val p = probes.toDF("key", "id", "vec")
       .join(sizes, "key")
       .select(col("key"), shardsCol(cap).as("shards"), col("id"), col("vec"))
-      .as[(Long, Int, Long, V)]
+      .as[(Long, Int, Long, Array[Float])]
       .flatMap { case (key, shards, id, vec) =>
         (0 until shards).iterator.map(sh => (key, sh, id, vec))
       }
@@ -238,7 +150,8 @@ object Ann {
         val mem = ms.map(t => (t._3, t._4)).toArray // bounded by ~cap
         ps.flatMap { case (_, _, qid, qv) =>
           mem.iterator.collect {
-            case (nid, nv) if nid != qid => (qid, nid, codec.sim(qv, nv))
+            case (nid, nv) if nid != qid =>
+              (qid, nid, math.floor(dot(qv, nv) * 1e5 + 0.5) / 1e5)
           }
         }
       }
@@ -322,9 +235,9 @@ object Ann {
   // ~linear in n (recall is then governed by `tables` / `nprobe`).
 
   /** bits so that expected bucket size ≈ targetBucket; clamped to 40 —
-    * deliberately below the 48-bit packed-signature space [[lshKeyed]]
-    * masks to, so random-hyperplane signatures keep collision mass (2^40
-    * buckets already exceeds any corpus this engine targets divided by
+    * deliberately below the 48-bit packed-signature space [[lshKey]] masks
+    * to, so random-hyperplane signatures keep collision mass (2^40 buckets
+    * already exceeds any corpus this engine targets divided by
     * targetBucket).
     */
   def autoBits(n: Long, targetBucket: Int = 128): Int = {
@@ -341,24 +254,22 @@ object Ann {
     */
   def autoNprobe(nlist: Int): Int = math.min(64, math.max(8, nlist / 8))
 
-  /** Each vector under its `tables` LSH bucket keys: the table in the top
-    * 16 bits, the signature masked to the low 48.
+  /** LSH bucket key of table `t`: the table in the top 16 bits, the
+    * signature masked to the low 48.
     */
-  private def lshKeyed[V](vectors: Dataset[(Long, V)], tables: Int, bits: Int)(
-      implicit codec: Codec[V]): Dataset[(Long, Long, V)] = {
-    import codec.tag
+  @inline private def lshKey(t: Int, sig: Long): Long =
+    (t.toLong << 48) ^ (sig & 0xffffffffffffL)
+
+  /** Each float vector once per LSH table: (key, id, vec). */
+  private def lshKeyed(
+      vectors: Dataset[(Long, Array[Float])],
+      tables: Int,
+      bits: Int): Dataset[(Long, Long, Array[Float])] = {
     val spark = vectors.sparkSession
     import spark.implicits._
     vectors.flatMap { case (id, v) =>
-      (0 until tables).iterator.map(t =>
-        ((t.toLong << 48) ^ (codec.signature(v, t, bits) & 0xffffffffffffL), id, v))
+      (0 until tables).iterator.map(t => (lshKey(t, signature(v, t, bits)), id, v))
     }
-  }
-
-  private def lsh[V: Codec](
-      vectors: Dataset[(Long, V)], k: Int, tables: Int, bits: Int, cap: Int): DataFrame = {
-    val keyed = lshKeyed(vectors, tables, bits)
-    topK(pairSims(keyed, keyed, cap), k)
   }
 
   /** LSH-bucketed approximate top-k cosine neighbors for every vector.
@@ -371,17 +282,10 @@ object Ann {
       k: Int = 5,
       tables: Int = 8,
       bits: Int = 10,
-      bucketCap: Int = 4096): DataFrame = lsh(vectors, k, tables, bits, bucketCap)
-
-  /** [[lshTopK]] over the quantized store: same bucket/shard topology,
-    * signatures from codes, rerank via the integer kernel.
-    */
-  def lshTopKI8(
-      vectors: Dataset[(Long, Double, Array[Byte])],
-      k: Int = 5,
-      tables: Int = 8,
-      bits: Int = 10,
-      bucketCap: Int = 4096): DataFrame = lsh(Int8.rows(vectors), k, tables, bits, bucketCap)
+      bucketCap: Int = 4096): DataFrame = {
+    val keyed = lshKeyed(vectors, tables, bits)
+    topK(boundedPairSimsRaw(keyed, keyed, bucketCap), k)
+  }
 
   /** Deterministic k-means coarse quantizer trained on a driver-side
     * sample — the IVF pattern: the centroid table is tiny (≈√n cells) and
@@ -427,7 +331,7 @@ object Ann {
         val sums = Array.fill(snap.length)(new Array[Double](dim))
         val counts = new Array[Int](snap.length)
         chunk.foreach { v =>
-          val c = nearestCell(v, snap)
+          val c = nearestCentroid(v, snap)
           counts(c) += 1
           var d = 0
           while (d < dim) { sums(c)(d) += v(d); d += 1 }
@@ -453,39 +357,20 @@ object Ann {
     cents
   }
 
-  /** The best-scoring cell; the first one on ties. */
-  private def nearestCell[V](v: V, cents: Array[Array[Float]])(implicit codec: Codec[V]): Int = {
+  def nearestCentroid(v: Array[Float], cents: Array[Array[Float]]): Int = {
     var best = 0
-    var bestScore = Double.MinValue
+    var bestDot = Double.MinValue
     var c = 0
     while (c < cents.length) {
-      val s = codec.cellScore(v, cents(c))
-      if (s > bestScore) { bestScore = s; best = c }
+      val d = dot(v, cents(c))
+      if (d > bestDot) { bestDot = d; best = c }
       c += 1
     }
     best
   }
 
-  private def ivf[V](
-      vectors: Dataset[(Long, V)], k: Int, nlist: Int, nprobe: Int, cap: Int)(
-      implicit codec: Codec[V]): DataFrame = {
-    import codec.tag
-    val spark = vectors.sparkSession
-    import spark.implicits._
-    val cents = spark.sparkContext.broadcast(trainCentroids(codec.floats(vectors), nlist))
-    // probe count follows the EFFECTIVE cell count (the sample can back
-    // fewer centroids than requested), never the nominal nlist
-    val effProbe = math.min(nprobe, cents.value.length)
-    val assigned = vectors.map { case (id, v) =>
-      (nearestCell(v, cents.value).toLong, id, v)
-    }
-    val probes = vectors.flatMap { case (id, v) =>
-      val scores = cents.value.map(codec.cellScore(v, _))
-      scores.indices.sortBy(c => -scores(c)).take(effProbe).iterator
-        .map(c => (c.toLong, id, v))
-    }
-    topK(pairSims(assigned, probes, cap), k)
-  }
+  private def topCentroids(v: Array[Float], cents: Array[Array[Float]], p: Int): Seq[Int] =
+    cents.indices.sortBy(c => -dot(v, cents(c))).take(p)
 
   /** IVF approximate top-k: assign vectors to their nearest centroid cell,
     * probe each query's `nprobe` closest cells, exact-rerank inside. The
@@ -497,18 +382,21 @@ object Ann {
       k: Int = 5,
       nlist: Int = 16,
       nprobe: Int = 4,
-      bucketCap: Int = 4096): DataFrame = ivf(vectors, k, nlist, nprobe, bucketCap)
-
-  /** [[ivfTopK]] over the quantized store: cells are assigned and probed
-    * from the codes, and the within-cell rerank — the bandwidth-bound
-    * part — runs the integer kernel.
-    */
-  def ivfTopKI8(
-      vectors: Dataset[(Long, Double, Array[Byte])],
-      k: Int = 5,
-      nlist: Int = 16,
-      nprobe: Int = 4,
-      bucketCap: Int = 4096): DataFrame = ivf(Int8.rows(vectors), k, nlist, nprobe, bucketCap)
+      bucketCap: Int = 4096): DataFrame = {
+    val spark = vectors.sparkSession
+    import spark.implicits._
+    val cents = spark.sparkContext.broadcast(trainCentroids(vectors, nlist))
+    // probe count follows the EFFECTIVE cell count (the sample can back
+    // fewer centroids than requested), never the nominal nlist
+    val effProbe = math.min(nprobe, cents.value.length)
+    val assigned = vectors.map { case (id, v) =>
+      (nearestCentroid(v, cents.value).toLong, id, v)
+    }
+    val probes = vectors.flatMap { case (id, v) =>
+      topCentroids(v, cents.value, effProbe).iterator.map(c => (c.toLong, id, v))
+    }
+    topK(boundedPairSimsRaw(assigned, probes, bucketCap), k)
+  }
 
   /** Embedding-cosine near-duplicate pairs, exact: every (a < b) pair with
     * dot ≥ tau. The |n|² broadcast product is the CORRECTNESS BASELINE for
@@ -540,7 +428,7 @@ object Ann {
         }
         Iterator.range(lo, arr.length).flatMap { i =>
           val (y, vy) = arr(i)
-          val sim = Float32.sim(vx, vy)
+          val sim = math.floor(dot(vx, vy) * 1e5 + 0.5) / 1e5
           if (sim >= tau) Iterator.single((x, y, sim)) else Iterator.empty
         }
       }
@@ -566,9 +454,162 @@ object Ann {
     // discarded. A pair re-surfacing via several buckets always carries
     // the SAME sim (pure function of the two vectors), so filter-then-
     // dedup ≡ dedup-then-filter.
-    pairSims(keyed, keyed, bucketCap)
+    boundedPairSimsRaw(keyed, keyed, bucketCap)
       .filter(col("qid") < col("nid") && col("sim") >= tau)
       .dropDuplicates("qid", "nid")
       .select(col("qid").as("a"), col("nid").as("b"), col("sim"))
+  }
+
+  // ------------------------------------------------------------------
+  // Int8 search path: ANN directly over quantized (scale, codes)
+  // ------------------------------------------------------------------
+  // Searching the quantized store WITHOUT dequantizing is the actual
+  // serve-time win of int8 storage: the rerank kernel reads 1 B/component
+  // instead of 4 (the memory-bandwidth-bound part of ANN at scale) and
+  // accumulates integer products, with ONE float multiply (scale_a ·
+  // scale_b · acc) per pair instead of one per component. Neighbor
+  // overlap vs the float path is spec-gated ≥ 0.9 (StreamingAnnSpec);
+  // the A/B timing lives in tools/I8AnnBench.
+
+  /** Integer dot over int8 codes — the bandwidth-bound kernel. Exact in
+    * Long (|codes| · 127² ≪ 2⁶³).
+    */
+  def dotI8(a: Array[Byte], b: Array[Byte]): Long = {
+    var s = 0L
+    var i = 0
+    while (i < a.length) { s += a(i).toInt * b(i).toInt; i += 1 }
+    s
+  }
+
+  /** Quantized pair similarity with the operator family's rounding:
+    * scale_a · scale_b · (integer dot), floor(x·1e5+0.5)/1e5.
+    */
+  @inline def simI8(sa: Double, ca: Array[Byte], sb: Double, cb: Array[Byte]): Double =
+    math.floor(sa * sb * dotI8(ca, cb).toDouble * 1e5 + 0.5) / 1e5
+
+  /** Random-hyperplane signature over codes. The per-vector scale is
+    * POSITIVE, so sign(Σ codeᵢ·scale·gᵢ) = sign(Σ codeᵢ·gᵢ): the
+    * signature needs no dequantization and no scale at all (zero-scale
+    * vectors are all-zero codes → signature 0, deterministic).
+    */
+  def signatureI8(codes: Array[Byte], table: Int, bits: Int): Long = {
+    val p = planes(table, bits, codes.length)
+    var sig = 0L
+    var b = 0
+    while (b < bits) {
+      var dot = 0.0
+      var d = 0
+      val off = b * codes.length
+      while (d < codes.length) {
+        dot += codes(d).toInt * p(off + d)
+        d += 1
+      }
+      if (dot > 0) sig |= (1L << b)
+      b += 1
+    }
+    sig
+  }
+
+  /** [[boundedPairSimsRaw]]'s int8 twin: the same shard assignment and
+    * sub-sharded cogroup shape (members materialized ≤ ~cap per task,
+    * probes streaming), the rerank kernel is [[dotI8]].
+    * rows: (key, id, scale, codes).
+    */
+  private def boundedPairSimsRawI8(
+      members: Dataset[(Long, Long, Double, Array[Byte])],
+      probes: Dataset[(Long, Long, Double, Array[Byte])],
+      cap: Int): DataFrame = {
+    val spark = members.sparkSession
+    import spark.implicits._
+    val mdf = members.toDF("key", "id", "scale", "codes")
+    val sizes = bucketSizes(mdf)
+    val m = withShard(mdf, sizes, cap).as[(Long, Int, Long, Double, Array[Byte])]
+    val p = probes.toDF("key", "id", "scale", "codes")
+      .join(sizes, "key")
+      .select(col("key"), shardsCol(cap).as("shards"),
+        col("id"), col("scale"), col("codes"))
+      .as[(Long, Int, Long, Double, Array[Byte])]
+      .flatMap { case (key, shards, id, sc, cs) =>
+        (0 until shards).iterator.map(sh => (key, sh, id, sc, cs))
+      }
+    p.groupByKey(r => (r._1, r._2))
+      .cogroup(m.groupByKey(r => (r._1, r._2))) { (_, ps, ms) =>
+        val mem = ms.map(t => (t._3, t._4, t._5)).toArray // bounded by ~cap
+        ps.flatMap { case (_, _, qid, qs, qc) =>
+          mem.iterator.collect {
+            case (nid, ns, nc) if nid != qid =>
+              (qid, nid, simI8(qs, qc, ns, nc))
+          }
+        }
+      }
+      .toDF("qid", "nid", "sim")
+  }
+
+  /** [[lshTopK]] over the quantized store: same bucket/shard topology,
+    * signatures from codes, rerank via the integer kernel.
+    */
+  def lshTopKI8(
+      vectors: Dataset[(Long, Double, Array[Byte])],
+      k: Int = 5,
+      tables: Int = 8,
+      bits: Int = 10,
+      bucketCap: Int = 4096): DataFrame = {
+    val spark = vectors.sparkSession
+    import spark.implicits._
+    val keyed = vectors.flatMap { case (id, sc, cs) =>
+      (0 until tables).iterator.map(t => (lshKey(t, signatureI8(cs, t, bits)), id, sc, cs))
+    }
+    topK(boundedPairSimsRawI8(keyed, keyed, bucketCap), k)
+  }
+
+  /** [[ivfTopK]] over the quantized store. The tiny centroid table stays
+    * float (trained on the dequantized driver sample — centroid work is
+    * the cheap part); cell assignment maximizes Σ codeᵢ·centᵢ, which
+    * equals the dequantized argmax because scale > 0 is constant per
+    * vector. The within-cell rerank — the bandwidth-bound part — runs
+    * the integer kernel.
+    */
+  def ivfTopKI8(
+      vectors: Dataset[(Long, Double, Array[Byte])],
+      k: Int = 5,
+      nlist: Int = 16,
+      nprobe: Int = 4,
+      bucketCap: Int = 4096): DataFrame = {
+    val spark = vectors.sparkSession
+    import spark.implicits._
+    val deq = vectors.map { case (id, sc, cs) =>
+      (id, cs.map(c => (c * sc).toFloat))
+    }
+    val cents = spark.sparkContext.broadcast(trainCentroids(deq, nlist))
+    val effProbe = math.min(nprobe, cents.value.length)
+    def nearestByCodes(cs: Array[Byte]): Int = {
+      val c = cents.value
+      var best = 0
+      var bestDot = Double.MinValue
+      var i = 0
+      while (i < c.length) {
+        var s = 0.0
+        var d = 0
+        while (d < cs.length) { s += cs(d).toInt * c(i)(d); d += 1 }
+        if (s > bestDot) { bestDot = s; best = i }
+        i += 1
+      }
+      best
+    }
+    val assigned = vectors.map { case (id, sc, cs) =>
+      (nearestByCodes(cs).toLong, id, sc, cs)
+    }
+    val probes = vectors.flatMap { case (id, sc, cs) =>
+      val c = cents.value
+      val scored = c.indices.map { i =>
+        var s = 0.0
+        var d = 0
+        while (d < cs.length) { s += cs(d).toInt * c(i)(d); d += 1 }
+        (i, s)
+      }
+      scored.sortBy(-_._2).take(effProbe).iterator
+        .map { case (ci, _) => (ci.toLong, id, sc, cs) }
+    }
+    topK(boundedPairSimsRawI8(assigned, probes, bucketCap), k)
   }
 }
